@@ -134,7 +134,8 @@ class Compiler:
         # the frontier trajectory predicts a high-diameter tail — the
         # crossover measured in STRESS_PATH_DIAMETER (semi-naive loses
         # 63× wall at chain d=1000, doubling 1.26× on a wide forest).
-        assert path_strategy in ("auto", "seminaive", "doubling")
+        if path_strategy not in ("auto", "seminaive", "doubling"):
+            raise ValueError(f"unknown path_strategy {path_strategy!r}")
         self.path_strategy = path_strategy
 
     # -- public -----------------------------------------------------------
@@ -296,6 +297,12 @@ class Compiler:
         raise NotImplementedError(f"algebra node {type(node).__name__}")
 
     # -- helpers ----------------------------------------------------------
+    def _is_id_var(self, v: str) -> bool:
+        """Whether ``v`` rides as a raw dictionary id instead of a term
+        struct. Term mode reads every variable's value; the ID-mode
+        compiler (dictionary.id_compiler) overrides this."""
+        return False
+
     def _active_graph(self, g: A.Node | None) -> A.Node:
         if g is None:
             return A.Var(_tmp("g"), binding=False)

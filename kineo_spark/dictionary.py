@@ -481,9 +481,9 @@ def needed_value_vars(alg: A.Algebra, projection: tuple[str, ...] | None):
             return walk(n.child)
         if isinstance(n, A.PathPattern):
             # endpoint vars follow the global projection rule: the
-            # ID-mode path evaluator (paths._eval_path_ids) can emit
-            # them as raw dictionary ids, so join-only endpoints stay
-            # 8-byte longs into the enclosing joins
+            # path evaluator (paths.eval_path) can emit them as raw
+            # dictionary ids, so join-only endpoints stay 8-byte longs
+            # into the enclosing joins
             if isinstance(n.graph, A.Var) and n.graph.binding:
                 need.add(n.graph.name)
             return True

@@ -2,19 +2,33 @@
 
 Reference: recursive path iterators with an ``alp`` transitive-closure
 helper (/root/reference/Sources/Kineo/SPARQL/MaterializedQueryPlan.swift:
-1707-2174 and IDQueryPlan.swift:802-1225). The SQLite backend compiles
-``p+``/``p*`` to recursive CTEs (SQLiteQuadStore.swift:593-665); Spark SQL
-has no recursive CTE, so the transitive operators run as a driver-
-coordinated distributed semi-naive fixpoint:
+1707-2174 and IDQueryPlan.swift:802-1225). The reference keeps one
+implementation per plan family; here ONE evaluator (``eval_path``) serves
+the term-mode and the ID-mode compiler alike, because both read the same
+term-struct scans through ``compiler._scan``:
 
-    frontier ⋈ edges → new pairs; accumulate DISTINCT; stop when empty.
+* edges are hashed AT SCAN to 8-byte dictionary ids (``id_of_term_col``,
+  the key the dictionary encoder assigns; {h, l} structs at 128 bits),
+  so no term struct or key string enters any path shuffle;
+* ``p+``/``p*`` run as a key-space fixpoint over (a, b) id pairs
+  (``_closure_pairs``). The SQLite backend compiles them to recursive
+  CTEs (SQLiteQuadStore.swift:593-665); Spark SQL has no usable
+  recursive CTE, so the closure is a driver-coordinated distributed
+  semi-naive fixpoint — frontier ⋈ edges → new pairs; accumulate
+  DISTINCT; stop when empty — with an adaptive switch to doubling and a
+  driver-local mirror for byte-gated relations;
+* a bound endpoint seeds the closure as a BFS from its id (``alp``),
+  and endpoint constants filter as id equality;
+* terms are joined back ONCE from an id→term node map, only for the
+  endpoint variables the query reads (``compiler._is_id_var``; the base
+  term-mode compiler reads every endpoint, the ID-mode compiler keeps
+  join-only endpoints as ids into the enclosing joins).
 
-Each round is a full Spark job (hash join + dedup, all executors);
-``localCheckpoint`` truncates lineage so 100-round closures don't build
-mile-long plans. The edge relation is deduplicated once up front —
-closure size, not input size, bounds the work. For analytic-scale
-all-pairs reachability GraphFrames/Pregel is the alternative backend;
-this implementation keeps everything in DataFrame land.
+Node maps dedup with full-row ``distinct()``: the term column is
+functionally dependent on its id (the hash of the injective term key —
+the closure's standing no-collision invariant), and a subset dedup would
+carry the term through ``first()`` aggregates whose struct/string
+buffers force SortAggregate; ``distinct()`` hash-aggregates.
 """
 
 from __future__ import annotations
@@ -22,186 +36,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kineo_spark import algebra as A
-from kineo_spark.model import PyTerm, term_key
-
-# pair frame columns: __s term, __o term, __sk, __ok (keys)
+from kineo_spark.dictionary import _const_id, id_of_term_col
+from kineo_spark.model import PyTerm
 
 
 def _gvar(graph) -> str | None:
     """Name of a BINDING graph variable (``GRAPH ?g { path }``), else
     None. A binding graph var means the path must evaluate PER NAMED
     GRAPH: every pair key becomes a {g, n} struct so composition joins,
-    closure iterations, and dedups stay within one graph, and ?g rides
-    along as the __g column (§18.1.7 — eval(D(G), Graph(var, P))
+    closure iterations, and dedups stay within one graph, and ?g binds
+    from the key's graph part (§18.1.7 — eval(D(G), Graph(var, P))
     unions eval(D(D[g]), P) over each named graph with var bound)."""
     if isinstance(graph, A.Var) and getattr(graph, "binding", False):
         return graph.name
     return None
-
-
-def _pairs(df: DataFrame, s, o, g=None) -> DataFrame:
-    if g is None:
-        return df.select(
-            s.alias("__s"), o.alias("__o"),
-            term_key(s).alias("__sk"), term_key(o).alias("__ok"),
-        )
-    gk = term_key(g)
-    return df.select(
-        s.alias("__s"), o.alias("__o"), g.alias("__g"),
-        F.struct(gk.alias("g"), term_key(s).alias("n")).alias("__sk"),
-        F.struct(gk.alias("g"), term_key(o).alias("n")).alias("__ok"),
-    )
-
-
-def _edges_for(compiler, path: A.Path, graph) -> DataFrame:
-    """One-step relation for a path as (__s, __o, __sk, __ok) — plus
-    __g with graph-scoped struct keys under a binding graph var."""
-    A_ = A
-    gname = _gvar(graph)
-    if isinstance(path, A.PLink):
-        sv, ov = A.Var("__ps"), A.Var("__po")
-        plan = compiler._scan(A.QuadPattern(sv, path.iri, ov, graph))
-        return _pairs(plan.df, plan.df["__ps"], plan.df["__po"],
-                      plan.df[gname] if gname else None)
-    if isinstance(path, A.PInv):
-        inner = _edges_for(compiler, path.path, graph)
-        cols = [
-            inner["__o"].alias("__s"), inner["__s"].alias("__o"),
-            inner["__ok"].alias("__sk"), inner["__sk"].alias("__ok"),
-        ]
-        if gname:
-            cols.append(inner["__g"])
-        return inner.select(*cols)
-    if isinstance(path, A.PSeq):
-        l = _edges_for(compiler, path.lhs, graph)
-        r = _edges_for(compiler, path.rhs, graph)
-        r2 = r.select(
-            r["__s"].alias("__ms"), r["__o"].alias("__ro"),
-            r["__sk"].alias("__msk"), r["__ok"].alias("__rok"),
-        )
-        # scoped keys make the hop join per-graph automatically
-        j = l.join(r2, l["__ok"] == r2["__msk"], "inner")
-        cols = [j["__s"], j["__ro"].alias("__o"), j["__sk"],
-                j["__rok"].alias("__ok")]
-        if gname:
-            cols.append(l["__g"])
-        return j.select(*cols)
-    if isinstance(path, A.PAlt):
-        return _edges_for(compiler, path.lhs, graph).unionByName(
-            _edges_for(compiler, path.rhs, graph)
-        )
-    if isinstance(path, A.PNps):
-        sv, pv, ov = A.Var("__ps"), A.Var("__pp"), A.Var("__po")
-        plan = compiler._scan(A.QuadPattern(sv, pv, ov, graph))
-        df = plan.df
-        excluded = [t.lex for t in path.iris]
-        df = df.filter(~df["__pp"]["lex"].isin(excluded))
-        return _pairs(df, df["__ps"], df["__po"],
-                      df[gname] if gname else None)
-    # NESTED closures (a star/plus/opt under seq/alt/inv, e.g.
-    # ((p/q)|^(r+))* ): evaluate the inner fixpoint to a pair relation
-    # and keep composing relationally. Top-level closures still go
-    # through eval_path, which adds the seeded-BFS optimization; a
-    # nested closure is inherently unseeded (its endpoints are interior
-    # join columns), so the full inner closure is the correct cost.
-    if isinstance(path, (A.PPlus, A.PStar, A.PZeroOrOne)):
-        strategy = getattr(compiler, "path_strategy", "auto")
-        if isinstance(path, A.PZeroOrOne):
-            one = _edges_for(compiler, path.path, graph) \
-                .distinct()  # terms dependent on keys; see _closure node-map note
-        else:
-            one = _closure(compiler, _edges_for(compiler, path.path, graph),
-                           compiler.max_path_iterations, strategy=strategy,
-                           scoped=bool(gname))
-        if isinstance(path, A.PPlus):
-            return one
-        # zero-length arm: every graph node relates to itself (§18.4 ALP)
-        return one.unionByName(_graph_nodes(compiler, graph)) \
-            .distinct()  # terms dependent on keys; see _closure node-map note
-    raise NotImplementedError(type(path).__name__)
-
-
-def _closure(compiler, edges: DataFrame, max_iterations: int,
-             seed_key: str | None = None, reverse: bool = False,
-             strategy: str = "auto", scoped: bool = False) -> DataFrame:
-    """Semi-naive transitive closure, iterated in KEY SPACE.
-
-    The fixpoint loop moves only (a, b) pairs of 8-byte ``xxhash64``
-    node keys — 16 B/row through every iteration's shuffle, the same id
-    convention (hash of the injective term key) the dictionary layout
-    uses — and term structs are joined back ONCE from the node map after
-    convergence. At 100 TB this is the difference between shuffling
-    closure-sized streams of lexical structs every round and shuffling
-    longs.
-
-    With ``seed_key`` (a bound endpoint), the loop is a seeded BFS over
-    the edge relation (reverse=True walks edges backwards for a bound
-    OBJECT): only the reachable set is computed, not the full closure —
-    the reference's ``alp`` procedure does exactly this
-    (MaterializedQueryPlan.swift:2101-2174)."""
-    if scoped:
-        # graph-scoped keys: hash graph and node parts SEPARATELY into a
-        # {g, n} struct (32 B/row instead of 16) so the fixpoint joins
-        # stay per-graph while seeded BFS can still filter on the node
-        # part alone — the seed matches in every graph it has edges in.
-        def hkey(c):
-            return F.struct(F.xxhash64(F.col(c)["g"]).alias("g"),
-                            F.xxhash64(F.col(c)["n"]).alias("n"))
-    else:
-        def hkey(c):
-            return F.xxhash64(F.col(c))
-    ek = edges.select(
-        hkey("__sk").alias("__a"), hkey("__ok").alias("__b")
-    ).dropDuplicates(["__a", "__b"])
-    ncols = lambda key, term: [  # noqa: E731
-        hkey(key).alias("__k"), F.col(term).alias("__n"),
-        F.col(key).alias("__nk"),
-    ] + ([F.col("__g").alias("__ng")] if scoped else [])
-    # full-row distinct, not dropDuplicates(["__k"]): every non-key
-    # column is functionally dependent on __k (hash of the injective
-    # term key — the closure's standing no-collision invariant), and a
-    # subset-dedup carries the others through first() aggregates whose
-    # struct/string buffers force SortAggregate; distinct() hash-
-    # aggregates (guide §2.4 — drops two full sorts of the node map).
-    nodes = (
-        edges.select(*ncols("__sk", "__s"))
-        .unionByName(edges.select(*ncols("__ok", "__o")))
-        .distinct()
-    )
-    seed_col = F.xxhash64(F.lit(seed_key)) if seed_key is not None else None
-    # Overlap the node-map materialization with the fixpoint (guide
-    # §2.6): the node map depends only on the edge relation, never on
-    # the closure, and the fixpoint's rounds leave executors idle while
-    # the driver plans the next round — a background thread fills that
-    # idle capacity with the node map's dedup job.
-    wait_nodes, planned = _count_checkpointed_async(nodes)
-    acc = _closure_pairs(ek, max_iterations, seed_col, reverse, strategy,
-                         scoped=scoped, conf_hold=planned)
-    # size-gated broadcast of the node map into the materialize joins
-    # (guide §3.1): the closure is pairs-many rows, the node map only
-    # nodes-many — broadcasting the SMALL side spares the final joins
-    # their shuffle+sort of the whole closure (measured at sf0.1: the
-    # materialize count was 1.9 s / ~8 MB exchange per run, the
-    # dominant exec cost of every path query). Same byte-budget conf as
-    # the accumulator gate; past it the shuffle join is the right call.
-    nodes, n_nodes = wait_nodes()
-    small = _gate(n_nodes, _node_row_bytes(nodes),
-                  _acc_broadcast_limit(edges.sparkSession))
-    na_cols = [F.col("__k").alias("__ka"), F.col("__n").alias("__s"),
-               F.col("__nk").alias("__sk")]
-    if scoped:
-        na_cols.append(F.col("__ng").alias("__g"))
-    na = nodes.select(*na_cols)
-    nb = nodes.select(F.col("__k").alias("__kb"), F.col("__n").alias("__o"),
-                      F.col("__nk").alias("__ok"))
-    if small:
-        na, nb = F.broadcast(na), F.broadcast(nb)
-    out = (
-        acc.join(na, acc["__a"] == na["__ka"], "inner")
-        .join(nb, acc["__b"] == nb["__kb"], "inner")
-    )
-    return out.select("__s", "__o", "__sk", "__ok",
-                      *(["__g"] if scoped else []))
 
 
 # -- adaptive strategy selection (STRESS_PATH_DIAMETER_r11) -------------------
@@ -301,19 +149,12 @@ def _node_row_bytes(df: DataFrame) -> int:
     return 32 + sum(sz(f.dataType) for f in df.schema.fields)
 
 
-def _count_checkpointed(df: DataFrame) -> tuple[DataFrame, int]:
-    """Lazy-localCheckpoint + count in one job (the fixpoint's standard
-    move, guide §7.3): materializes the frame's blocks AND returns the
-    row count the size gates need; consumers then read the blocks, not
-    the lineage."""
-    df = df.localCheckpoint(eager=False)
-    return df, df.count()
-
-
 def _count_checkpointed_async(df: DataFrame):
-    """_count_checkpointed moved to a background thread (guide §2.6 —
-    overlap independent jobs): the node map never depends on the
-    closure, so both its plan-pinning lazy checkpoint (driver-side JVM
+    """Lazy-localCheckpoint + count in one job (guide §7.3: materializes
+    the frame's blocks AND returns the row count the size gates need),
+    run on a background thread (guide §2.6 — overlap independent jobs):
+    the node map never depends on the closure, so both its plan-pinning
+    lazy checkpoint (driver-side JVM
     planning, measured ~0.3-0.5 s per path query) and its materializing
     count run concurrently with the fixpoint's rounds, which otherwise
     leave executors idle during each round's planning gap. Returns
@@ -705,9 +546,9 @@ def _closure_pairs(ek: DataFrame, max_iterations: int,
                    switch_out: list | None = None,
                    conf_hold=None) -> DataFrame:
     """The pure long-pair fixpoint: input and output are (__a, __b)
-    8-byte key pairs — shared by the term path (keys = xxhash64 of the
-    injective term key) and the ID path (keys = dictionary ids). All
-    shuffles inside the loop move 16 B/row at any scale.
+    8-byte dictionary-id pairs (hashed at scan by eval_path in term and
+    ID mode alike; {g, n} structs when ``scoped``). All shuffles inside
+    the loop move 16 B/row at any scale.
 
     ``strategy``: 'seminaive' (frontier⋈edges, work-efficient),
     'doubling' (recursive squaring, ⌈log2 d⌉ rounds), or 'auto' (the
@@ -873,88 +714,34 @@ def _scripted_rounds(ek: DataFrame, ek_n: int, per_bytes: int, limit: int,
     return acc
 
 
-def _term_pair(compiler, t: PyTerm, scoped: bool = False) -> DataFrame:
-    """Single zero-length pair (t, t) — the whole zero-length
-    contribution when an endpoint is bound: ALP starts from the bound
-    term itself, whether or not it appears in the graph (reference
-    MaterializedQueryPlan.swift:2101-2174), so scanning every graph
-    node just to keep one is both wasteful and subtly wrong for terms
-    outside the graph."""
-    from kineo_spark.model import TERM_SCHEMA
-    from pyspark.sql import types as T
-    schema = T.StructType([T.StructField("__s", TERM_SCHEMA),
-                           T.StructField("__o", TERM_SCHEMA)])
-    tup = (t.kind, t.lex, t.dt, t.lang, t.num)
-    df = compiler.spark.createDataFrame([(tup, tup)], schema)
-    if scoped:
-        # under GRAPH ?g the zero-length pair (t, t) holds in EVERY
-        # named graph of the dataset (ALP starts from the bound term
-        # regardless of graph membership)
-        g = compiler.store.graph_terms()
-        j = df.crossJoin(F.broadcast(g))
-        return _pairs(j, j["__s"], j["__o"], j["__g"])
-    return _pairs(df, df["__s"], df["__o"])
-
-
-def _graph_nodes(compiler, graph) -> DataFrame:
-    """All terms appearing as subject or object (zero-length path
-    endpoints, reference MaterializedQueryPlan.swift:1986-2174) —
-    PER NAMED GRAPH under a binding graph var."""
-    gname = _gvar(graph)
-    sv, pv, ov = A.Var("__ps"), A.Var("__pp", binding=False), A.Var("__po")
-    plan = compiler._scan(A.QuadPattern(sv, pv, ov, graph))
-    df = plan.df
-    gcol = [df[gname].alias("__g")] if gname else []
-    subs = df.select(df["__ps"].alias("__n"), *gcol)
-    objs = df.select(df["__po"].alias("__n"), *gcol)
-    nodes = subs.unionByName(objs)
-    if gname:
-        nodes = nodes.withColumn(
-            "__nk", F.struct(term_key(nodes["__g"]).alias("g"),
-                             term_key(nodes["__n"]).alias("n")))
-        # full-row distinct: __n/__g are functionally dependent on __nk
-        # (term_key is injective) — see _closure's node-map note
-        nodes = nodes.distinct()
-        return nodes.select(
-            nodes["__n"].alias("__s"), nodes["__n"].alias("__o"),
-            nodes["__g"],
-            nodes["__nk"].alias("__sk"), nodes["__nk"].alias("__ok"),
-        )
-    nodes = nodes.withColumn("__nk", term_key(nodes["__n"])).distinct()
-    return nodes.select(
-        nodes["__n"].alias("__s"), nodes["__n"].alias("__o"),
-        nodes["__nk"].alias("__sk"), nodes["__nk"].alias("__ok"),
-    )
-
-
-# -- ID-space path evaluation ------------------------------------------------
+# -- evaluation ----------------------------------------------------------------
 # Reference: IDPathPlans — paths run entirely on dictionary ids and
 # materialize terms once at the top (IDQueryPlan.swift:802-1225).
 
 
+def _node_id(df: DataFrame, col, gname: str | None, kb: int):
+    """Dictionary id of a term column, hashed at scan — under a binding
+    graph var a per-graph {g, n} id struct, so composition joins,
+    closure rounds and dedups stay within one graph while seeded BFS can
+    still match the node part alone."""
+    if gname:
+        return F.struct(id_of_term_col(df[gname], kb).alias("g"),
+                        id_of_term_col(col, kb).alias("n"))
+    return id_of_term_col(col, kb)
+
+
 def _id_edges_for(compiler, path: A.Path, graph) -> DataFrame:
     """One-step relation as (__a, __b) dictionary-id longs computed
-    straight off the scans (id_of_term_col hash-at-scan): no term
-    structs and no key strings enter any path shuffle — Catalyst prunes
-    the scan down to the columns the two hashes read."""
-    from kineo_spark.dictionary import id_of_term_col as _idc
-
+    straight off the scans: no term structs and no key strings enter any
+    path shuffle — Catalyst prunes the scan down to the columns the two
+    hashes read."""
     kb = getattr(compiler, "_key_bits", 64)
-    id_of_term_col = lambda t: _idc(t, kb)  # noqa: E731
     gname = _gvar(graph)
-
-    def _mk(df, col):
-        # graph-scoped: {g, n} id struct so closure joins stay per-graph
-        if gname:
-            return F.struct(id_of_term_col(df[gname]).alias("g"),
-                            id_of_term_col(col).alias("n"))
-        return id_of_term_col(col)
-
     if isinstance(path, A.PLink):
         sv, ov = A.Var("__ps"), A.Var("__po")
         df = compiler._scan(A.QuadPattern(sv, path.iri, ov, graph)).df
-        return df.select(_mk(df, df["__ps"]).alias("__a"),
-                         _mk(df, df["__po"]).alias("__b"))
+        return df.select(_node_id(df, df["__ps"], gname, kb).alias("__a"),
+                         _node_id(df, df["__po"], gname, kb).alias("__b"))
     if isinstance(path, A.PInv):
         inner = _id_edges_for(compiler, path.path, graph)
         return inner.select(inner["__b"].alias("__a"),
@@ -972,22 +759,24 @@ def _id_edges_for(compiler, path: A.Path, graph) -> DataFrame:
         sv, pv, ov = A.Var("__ps"), A.Var("__pp"), A.Var("__po")
         df = compiler._scan(A.QuadPattern(sv, pv, ov, graph)).df
         df = df.filter(~df["__pp"]["lex"].isin([t.lex for t in path.iris]))
-        return df.select(_mk(df, df["__ps"]).alias("__a"),
-                         _mk(df, df["__po"]).alias("__b"))
-    # nested closures: same composition as the term path (_edges_for) —
-    # inner fixpoint on id longs, identity arm from the graph node ids
+        return df.select(_node_id(df, df["__ps"], gname, kb).alias("__a"),
+                         _node_id(df, df["__po"], gname, kb).alias("__b"))
+    # NESTED closures (a star/plus/opt under seq/alt/inv, e.g.
+    # ((p/q)|^(r+))* ): evaluate the inner fixpoint to a pair relation
+    # and keep composing relationally. Top-level closures go through
+    # eval_path, which adds the seeded BFS; a nested closure is
+    # inherently unseeded (its endpoints are interior join columns), so
+    # the full inner closure is the correct cost.
     if isinstance(path, (A.PPlus, A.PStar, A.PZeroOrOne)):
-        strategy = getattr(compiler, "path_strategy", "auto")
-        if isinstance(path, A.PZeroOrOne):
-            one = _id_edges_for(compiler, path.path, graph) \
-                .dropDuplicates(["__a", "__b"])
-        else:
-            ek = _id_edges_for(compiler, path.path, graph) \
-                .dropDuplicates(["__a", "__b"])
-            one = _closure_pairs(ek, compiler.max_path_iterations,
-                                 strategy=strategy, scoped=bool(gname))
+        one = _id_edges_for(compiler, path.path, graph) \
+            .dropDuplicates(["__a", "__b"])
+        if not isinstance(path, A.PZeroOrOne):
+            one = _closure_pairs(one, compiler.max_path_iterations,
+                                 strategy=compiler.path_strategy,
+                                 scoped=bool(gname))
         if isinstance(path, A.PPlus):
             return one
+        # zero-length arm: every graph node relates to itself (§18.4 ALP)
         ident = _id_graph_nodes(compiler, graph).select(
             F.col("__k").alias("__a"), F.col("__k").alias("__b"))
         return one.unionByName(ident).dropDuplicates(["__a", "__b"])
@@ -998,11 +787,7 @@ def _id_nodes_for(compiler, path: A.Path, graph) -> DataFrame:
     """(__k id, __n term) map covering every node the path's edges can
     touch — joined back ONCE, only against the ids that survive the
     closure and endpoint filters (survivor-only materialization)."""
-    from kineo_spark.dictionary import id_of_term_col as _idc
-
     kb = getattr(compiler, "_key_bits", 64)
-    id_of_term_col = lambda t: _idc(t, kb)  # noqa: E731
-
     if isinstance(path, (A.PStar, A.PZeroOrOne)):
         # a nested zero-arm introduces identity pairs over EVERY graph
         # node — the node map must cover them or materialize drops rows
@@ -1016,60 +801,49 @@ def _id_nodes_for(compiler, path: A.Path, graph) -> DataFrame:
     if isinstance(path, A.PLink):
         sv, ov = A.Var("__ps"), A.Var("__po")
         df = compiler._scan(A.QuadPattern(sv, path.iri, ov, graph)).df
-        s, o = df["__ps"], df["__po"]
     elif isinstance(path, A.PNps):
         sv, pv, ov = A.Var("__ps"), A.Var("__pp", binding=False), A.Var("__po")
         df = compiler._scan(A.QuadPattern(sv, pv, ov, graph)).df
-        s, o = df["__ps"], df["__po"]
     else:
         raise NotImplementedError(type(path).__name__)
-    return df.select(id_of_term_col(s).alias("__k"), s.alias("__n")) \
-        .unionByName(df.select(id_of_term_col(o).alias("__k"), o.alias("__n")))
+    s, o = df["__ps"], df["__po"]
+    return df.select(id_of_term_col(s, kb).alias("__k"), s.alias("__n")) \
+        .unionByName(df.select(id_of_term_col(o, kb).alias("__k"),
+                               o.alias("__n")))
 
 
 def _id_graph_nodes(compiler, graph, scoped: bool = True) -> DataFrame:
     """(__k, __n) over every subject/object in the graph (zero-length
-    endpoints for unbound ``p*`` / ``p?``). Under a binding graph var
+    endpoints for unbound ``p*`` / ``p?``, reference
+    MaterializedQueryPlan.swift:1986-2174). Under a binding graph var
     the key is a per-graph {g, n} id struct (``scoped=False`` forces
     plain node ids — the shape the materialization node map needs)."""
-    from kineo_spark.dictionary import id_of_term_col as _idc
-
     kb = getattr(compiler, "_key_bits", 64)
-    id_of_term_col = lambda t: _idc(t, kb)  # noqa: E731
     gname = _gvar(graph) if scoped else None
-
-    def _mk(df, col):
-        if gname:
-            return F.struct(id_of_term_col(df[gname]).alias("g"),
-                            id_of_term_col(col).alias("n"))
-        return id_of_term_col(col)
-
     sv, pv, ov = A.Var("__ps"), A.Var("__pp", binding=False), A.Var("__po")
     df = compiler._scan(A.QuadPattern(sv, pv, ov, graph)).df
     return (
-        df.select(_mk(df, df["__ps"]).alias("__k"),
+        df.select(_node_id(df, df["__ps"], gname, kb).alias("__k"),
                   df["__ps"].alias("__n"))
-        .unionByName(df.select(_mk(df, df["__po"]).alias("__k"),
-                               df["__po"].alias("__n")))
-        .distinct()  # __n functionally dependent on __k; see _closure
+        .unionByName(df.select(_node_id(df, df["__po"], gname, kb)
+                               .alias("__k"), df["__po"].alias("__n")))
+        .distinct()  # __n functionally dependent on __k (module note)
     )
 
 
-def _eval_path_ids(compiler, node: A.PathPattern, graph) -> "Plan":
-    """ID-mode property paths: edges fetch as dictionary-id longs, the
-    closure iterates on longs (16 B/row shuffles), endpoint constants
-    filter as id equality, and terms materialize from a node map only
-    for the variables the query actually reads — join-only endpoint
-    vars stay 8-byte ids into the enclosing joins. Reference:
-    IDPathPlans + MaterializeTermsPlan boundary, IDQueryPlan.swift:
-    802-1225."""
+def eval_path(compiler, node: A.PathPattern, graph) -> "Plan":
+    """Property path pattern → Plan, for every compiler: edges fetch as
+    dictionary-id longs, the closure iterates on longs (16 B/row
+    shuffles), a bound endpoint seeds the closure BFS and filters as id
+    equality, and terms materialize from a node map only for the
+    variables the compiler reads (``compiler._is_id_var``) — join-only
+    endpoint vars of an ID-mode query stay 8-byte ids into the enclosing
+    joins. Reference: IDPathPlans + MaterializeTermsPlan boundary,
+    IDQueryPlan.swift:802-1225; ALP, MaterializedQueryPlan.swift:
+    2101-2174."""
     from kineo_spark.compiler import Plan
-    from kineo_spark.dictionary import _const_id as _cid
-    from kineo_spark.dictionary import id_of_term_col as _idc
 
     kb = getattr(compiler, "_key_bits", 64)
-    _const_id = lambda t: _cid(t, kb)  # noqa: E731
-
     path = node.path
     spark = compiler.spark
     gname = _gvar(graph)
@@ -1079,104 +853,20 @@ def _eval_path_ids(compiler, node: A.PathPattern, graph) -> "Plan":
         seed_term = node.subject
     elif isinstance(node.object, PyTerm):
         seed_term, seed_rev = node.object, True
-    seed_col = _const_id(seed_term) if seed_term is not None else None
-    strategy = getattr(compiler, "path_strategy", "auto")
+    seed_col = _const_id(seed_term, kb) if seed_term is not None else None
 
-    def zero_pairs() -> DataFrame:
-        if seed_term is not None:
-            if scoped:
-                # (t, t) holds in EVERY named graph (ALP starts from the
-                # bound term regardless of graph membership)
-                g = compiler.store.graph_terms()
-                k = F.struct(_idc(F.col("__g"), kb).alias("g"),
-                             _const_id(seed_term).alias("n"))
-                return g.select(k.alias("__a"), k.alias("__b"))
-            return spark.range(1).select(
-                _const_id(seed_term).alias("__a"),
-                _const_id(seed_term).alias("__b"))
-        n = _id_graph_nodes(compiler, graph)
-        return n.select(F.col("__k").alias("__a"), F.col("__k").alias("__b"))
-
-    def _build_nodes(inner, zero_used) -> DataFrame:
-        """The id→term map for the materialize joins below — factored
-        out so the closure branches can start materializing it on a
-        background thread while the fixpoint runs (guide §2.6: the two
-        are independent; the closure's driver-planning gaps leave
-        executors idle for exactly this job)."""
-        nodes = _id_nodes_for(compiler, inner, graph)
-        if zero_used and seed_term is None:
-            nodes = nodes.unionByName(
-                _id_graph_nodes(compiler, graph, scoped=False))
-        if seed_term is not None:
-            nodes = nodes.unionByName(spark.range(1).select(
-                _const_id(seed_term).alias("__k"),
-                seed_term.as_column().alias("__n")))
-        if scoped:
-            g = compiler.store.graph_terms()
-            nodes = nodes.unionByName(g.select(
-                _idc(F.col("__g"), kb).alias("__k"),
-                F.col("__g").alias("__n")))
-        return nodes.distinct()  # __n dependent on __k; see _closure
-
-    def _will_materialize() -> bool:
-        # mirrors the out_cols/mat computation below (unique BINDING
-        # endpoint vars + the scoped graph var, minus pure-id vars)
-        names: list[str] = []
-        for endpoint in (node.subject, node.object):
-            if not isinstance(endpoint, PyTerm) and endpoint.binding \
-                    and endpoint.name not in names:
-                names.append(endpoint.name)
-        if scoped and gname not in names:
-            names.append(gname)
-        return any(not compiler._is_id_var(v) for v in names)
-
-    zero_used = False
-    wait_nodes = None
-    if isinstance(path, A.PPlus):
-        ek = _id_edges_for(compiler, path.path, graph) \
-            .dropDuplicates(["__a", "__b"])
-        hold = None
-        if _will_materialize():
-            wait_nodes, hold = _count_checkpointed_async(
-                _build_nodes(path.path, False))
-        pairs = _closure_pairs(ek, compiler.max_path_iterations, seed_col,
-                               seed_rev, strategy, scoped=scoped,
-                               conf_hold=hold)
-        inner = path.path
-    elif isinstance(path, A.PStar):
-        ek = _id_edges_for(compiler, path.path, graph) \
-            .dropDuplicates(["__a", "__b"])
-        hold = None
-        if _will_materialize():
-            wait_nodes, hold = _count_checkpointed_async(
-                _build_nodes(path.path, True))
-        plus = _closure_pairs(ek, compiler.max_path_iterations, seed_col,
-                              seed_rev, strategy, scoped=scoped,
-                              conf_hold=hold)
-        pairs = plus.unionByName(zero_pairs()).dropDuplicates(["__a", "__b"])
-        inner, zero_used = path.path, True
-    elif isinstance(path, A.PZeroOrOne):
-        one = _id_edges_for(compiler, path.path, graph) \
-            .dropDuplicates(["__a", "__b"])
-        pairs = one.unionByName(zero_pairs()).dropDuplicates(["__a", "__b"])
-        inner, zero_used = path.path, True
-    else:
-        pairs = _id_edges_for(compiler, path, graph)  # bag semantics
-        inner = path
-
-    df = pairs
+    # endpoint binding, decided up front so the closure branch knows
+    # whether a node map will be needed before the fixpoint starts
     out_cols: dict[str, str] = {}
-    certain: set[str] = set()
+    filters = []
     for endpoint, colname in ((node.subject, "__a"), (node.object, "__b")):
         if isinstance(endpoint, PyTerm):
             nk = F.col(colname)["n"] if scoped else F.col(colname)
-            df = df.filter(nk == _const_id(endpoint))
-        else:
-            if endpoint.name in out_cols:  # same var both ends
-                df = df.filter(F.col("__a") == F.col("__b"))
-            elif endpoint.binding:
-                out_cols[endpoint.name] = colname
-                certain.add(endpoint.name)
+            filters.append(nk == _const_id(endpoint, kb))
+        elif endpoint.name in out_cols:  # same var both ends
+            filters.append(F.col("__a") == F.col("__b"))
+        elif endpoint.binding:
+            out_cols[endpoint.name] = colname
     sel = {n: (F.col(c)["n"] if scoped else F.col(c))
            for n, c in out_cols.items()}
     if scoped:
@@ -1184,16 +874,79 @@ def _eval_path_ids(compiler, node: A.PathPattern, graph) -> "Plan":
         # below from the graph-term map iff the query reads its value)
         sel[gname] = F.col("__a")["g"]
         out_cols[gname] = "__a"
-        certain.add(gname)
-    df = df.select(*[c.alias(n) for n, c in sel.items()])
-
     mat = [v for v in out_cols if not compiler._is_id_var(v)]
+
+    def zero_pairs() -> DataFrame:
+        if seed_term is not None:
+            # ALP starts from the bound term itself, whether or not it
+            # appears in the graph — one (t, t) pair, and under GRAPH ?g
+            # one in EVERY named graph
+            if scoped:
+                g = compiler.store.graph_terms()
+                k = F.struct(id_of_term_col(F.col("__g"), kb).alias("g"),
+                             seed_col.alias("n"))
+                return g.select(k.alias("__a"), k.alias("__b"))
+            return spark.range(1).select(seed_col.alias("__a"),
+                                         seed_col.alias("__b"))
+        n = _id_graph_nodes(compiler, graph)
+        return n.select(F.col("__k").alias("__a"), F.col("__k").alias("__b"))
+
+    def _build_nodes(inner, zero_used) -> DataFrame:
+        """The id→term map for the materialize joins below — factored
+        out so the closure branch can start materializing it on a
+        background thread while the fixpoint runs (guide §2.6: the two
+        are independent; the closure's driver-planning gaps leave
+        executors idle for exactly this job)."""
+        nodes = _id_nodes_for(compiler, inner, graph)
+        if zero_used and seed_term is None:
+            nodes = nodes.unionByName(
+                _id_graph_nodes(compiler, graph, scoped=False))
+        elif zero_used:
+            # the bound term's own zero-length pair may name a term
+            # outside the graph
+            nodes = nodes.unionByName(spark.range(1).select(
+                seed_col.alias("__k"), seed_term.as_column().alias("__n")))
+        if scoped:
+            g = compiler.store.graph_terms()
+            nodes = nodes.unionByName(g.select(
+                id_of_term_col(F.col("__g"), kb).alias("__k"),
+                F.col("__g").alias("__n")))
+        return nodes.distinct()  # __n dependent on __k (module note)
+
+    zero_used = isinstance(path, (A.PStar, A.PZeroOrOne))
+    wait_nodes = None
+    if isinstance(path, (A.PPlus, A.PStar, A.PZeroOrOne)):
+        inner = path.path
+        pairs = _id_edges_for(compiler, inner, graph) \
+            .dropDuplicates(["__a", "__b"])
+        if not isinstance(path, A.PZeroOrOne):
+            hold = None
+            if mat:
+                wait_nodes, hold = _count_checkpointed_async(
+                    _build_nodes(inner, zero_used))
+            pairs = _closure_pairs(pairs, compiler.max_path_iterations,
+                                   seed_col, seed_rev, compiler.path_strategy,
+                                   scoped=scoped, conf_hold=hold)
+        if zero_used:
+            pairs = pairs.unionByName(zero_pairs()) \
+                .dropDuplicates(["__a", "__b"])
+    else:
+        inner = path
+        pairs = _id_edges_for(compiler, path, graph)  # bag semantics
+
+    df = pairs
+    for cond in filters:
+        df = df.filter(cond)
+    df = df.select(*[c.alias(n) for n, c in sel.items()])
     if mat:
         if wait_nodes is None:
             wait_nodes, _ = _count_checkpointed_async(
                 _build_nodes(inner, zero_used))
         # size-gated broadcast of the id→term map into the materialize
-        # joins — same rationale and budget as the term path (_closure)
+        # joins (guide §3.1): the closure is pairs-many rows, the node
+        # map only nodes-many — broadcasting the SMALL side spares the
+        # final joins their shuffle+sort of the whole closure. Same
+        # byte-budget conf as the accumulator gate.
         nodes, n_nodes = wait_nodes()
         small = _gate(n_nodes, _node_row_bytes(nodes),
                       _acc_broadcast_limit(spark))
@@ -1205,67 +958,5 @@ def _eval_path_ids(compiler, node: A.PathPattern, graph) -> "Plan":
             df = (df.join(nv, df[v] == F.col(f"__k_{v}"), "inner")
                   .drop(v, f"__k_{v}")
                   .withColumnRenamed(f"__n_{v}", v))
-    return Plan(df.select(*out_cols.keys()), frozenset(certain),
-                frozenset(v for v in out_cols if v not in set(mat)))
-
-
-def eval_path(compiler, node: A.PathPattern, graph) -> "Plan":
-    from kineo_spark.compiler import Plan
-
-    if hasattr(compiler, "_is_id_var"):  # ID-mode compiler
-        return _eval_path_ids(compiler, node, graph)
-
-    path = node.path
-    gname = _gvar(graph)
-    scoped = gname is not None
-    # bound endpoint → seed the closure BFS there instead of computing
-    # the full closure and filtering after (alp-style, see _closure)
-    seed_key, seed_rev = None, False
-    if isinstance(node.subject, PyTerm):
-        seed_key = node.subject.key()
-    elif isinstance(node.object, PyTerm):
-        seed_key, seed_rev = node.object.key(), True
-    seed_term = node.subject if not seed_rev else node.object
-    strategy = getattr(compiler, "path_strategy", "auto")
-    if isinstance(path, A.PPlus):
-        pairs = _closure(compiler, _edges_for(compiler, path.path, graph),
-                         compiler.max_path_iterations, seed_key, seed_rev,
-                         strategy, scoped=scoped)
-    elif isinstance(path, A.PStar):
-        plus = _closure(compiler, _edges_for(compiler, path.path, graph),
-                        compiler.max_path_iterations, seed_key, seed_rev,
-                        strategy, scoped=scoped)
-        zero = (_term_pair(compiler, seed_term, scoped) if seed_key is not None
-                else _graph_nodes(compiler, graph))
-        pairs = plus.unionByName(zero).distinct()  # terms dependent on keys; see _closure node-map note
-    elif isinstance(path, A.PZeroOrOne):
-        one = _edges_for(compiler, path.path, graph).distinct()  # terms dependent on keys; see _closure node-map note
-        zero = (_term_pair(compiler, seed_term, scoped) if seed_key is not None
-                else _graph_nodes(compiler, graph))
-        pairs = one.unionByName(zero).distinct()  # terms dependent on keys; see _closure node-map note
-    else:
-        pairs = _edges_for(compiler, path, graph)
-
-    # bind endpoints
-    df = pairs
-    out_cols = {}
-    certain = set()
-    for endpoint, col, key in (
-        (node.subject, "__s", "__sk"),
-        (node.object, "__o", "__ok"),
-    ):
-        if isinstance(endpoint, PyTerm):
-            nk = F.col(key)["n"] if scoped else F.col(key)
-            df = df.filter(nk == endpoint.key())
-        else:
-            if endpoint.name in out_cols:  # same var both ends
-                df = df.filter(F.col("__sk") == F.col("__ok"))
-            elif endpoint.binding:
-                out_cols[endpoint.name] = col
-                certain.add(endpoint.name)
-    if scoped:
-        # ?g binds from the carried graph column (§18.1.7)
-        out_cols[gname] = "__g"
-        certain.add(gname)
-    df = df.select(*[F.col(c).alias(n) for n, c in out_cols.items()])
-    return Plan(df, frozenset(certain))
+    return Plan(df.select(*out_cols.keys()), frozenset(out_cols),
+                frozenset(v for v in out_cols if v not in mat))

@@ -10,8 +10,8 @@ MaterializedQueryPlan.swift:11-61). The oracle SQL is shared with the
 term-mode twin, so the driver hash-checks that both execution modes
 agree with DuckDB.
 
-BGP-bearing and path-bearing families are twinned (paths have a
-dedicated ID-space evaluator, paths._eval_path_ids). Window functions
+BGP-bearing and path-bearing families are twinned (paths.eval_path
+keeps join-only endpoints as dictionary ids in ID mode). Window functions
 share one code path in both modes, so an id twin would re-test the
 same plan.
 """
@@ -48,9 +48,9 @@ _TWINNED = [
     "sparql_expr_datetime",
     "sparql_expr_conditional",
     "sparql_reduced",
-    # property paths now have a dedicated ID-space evaluator
-    # (paths._eval_path_ids: id-long edge fetch, long-pair closure,
-    # survivor-only term materialization) — twin the whole family
+    # property paths (paths.eval_path: id-long edge fetch, long-pair
+    # closure, survivor-only term materialization — join-only endpoints
+    # stay ids in ID mode) — twin the whole family
     "sparql_path_seq",
     "sparql_path_inverse",
     "sparql_path_alt_plus",

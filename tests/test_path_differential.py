@@ -1,9 +1,14 @@
 """Differential fuzz for property paths: seeded random graphs and
-random path expressions, engine (term mode) vs an independent Python
-implementation of SPARQL 1.1 §18.4 semantics — bag composition for
-sequence/alternation, ALP set semantics for +/*/?, per-named-graph
+random path expressions, engine (term and ID mode) vs an independent
+Python implementation of SPARQL 1.1 §18.4 semantics — bag composition
+for sequence/alternation, ALP set semantics for +/*/?, per-named-graph
 evaluation under GRAPH ?g. The Python evaluator is written from the
-spec, not from paths.py, so agreement is evidence, not tautology."""
+spec, not from paths.py, so agreement is evidence, not tautology.
+
+Every case runs twice: with the default driver-local closure budget
+(at this scale the numpy mirror always fires) and with
+``spark.kineo.path.localClosureBytes=0``, which forces the distributed
+semi-naive → doubling fixpoint."""
 
 import random
 from collections import Counter
@@ -129,8 +134,29 @@ def _short(x: str) -> str:
     return x.rsplit("/", 1)[-1].rsplit(":", 1)[-1]
 
 
+LOCAL_CLOSURE = "spark.kineo.path.localClosureBytes"
+
+
+@pytest.fixture(params=[None, "0"], ids=["local_default", "local_off"])
+def local_closure(request, spark):
+    """Set the local-closure byte budget for one test (None = unset),
+    restoring the session's previous value afterwards."""
+    old = spark.conf.get(LOCAL_CLOSURE, None)
+    try:
+        if request.param is None:
+            spark.conf.unset(LOCAL_CLOSURE)
+        else:
+            spark.conf.set(LOCAL_CLOSURE, request.param)
+        yield request.param
+    finally:
+        if old is None:
+            spark.conf.unset(LOCAL_CLOSURE)
+        else:
+            spark.conf.set(LOCAL_CLOSURE, old)
+
+
 @pytest.mark.parametrize("seed", range(12))
-def test_path_differential_graph_scoped(spark, seed):
+def test_path_differential_graph_scoped(spark, local_closure, seed):
     rng = random.Random(1000 + seed)
     quads = rand_quads(rng)
     path = rand_path(rng, 2)
@@ -156,7 +182,7 @@ def test_path_differential_graph_scoped(spark, seed):
 
 @pytest.mark.parametrize("seed,kb", [(s, kb) for s in range(5)
                                      for kb in (64, 128)])
-def test_path_differential_id_modes(spark, seed, kb):
+def test_path_differential_id_modes(spark, local_closure, seed, kb):
     """The same spec-reference differential through the ID-mode path
     evaluator (scoped {g, n} id-struct closure) at both key widths."""
     from kineo_spark.dictionary import id_compiler

@@ -30,14 +30,23 @@ def path_store(spark):
     return QuadsDataFrameStore.from_rows(spark, rows)
 
 
+@pytest.fixture(params=["term", "id"])
+def comp(request, path_store):
+    """Both compilers run the one path evaluator — term mode
+    materializes every endpoint, ID mode hashes the same scans."""
+    if request.param == "id":
+        from kineo_spark.dictionary import id_compiler
+        return id_compiler(path_store)
+    return Compiler(path_store)
+
+
 def _pairs(comp, path, s="s", o="o"):
     alg = A.PathPattern(A.Var(s), path, A.Var(o))
     df = comp.compile(alg).df
     return {(r[s]["lex"].split("/")[-1], r[o]["lex"].split("/")[-1]) for r in df.collect()}
 
 
-def test_plus_chain_and_cycle(path_store):
-    comp = Compiler(path_store)
+def test_plus_chain_and_cycle(comp):
     got = _pairs(comp, A.PPlus(A.PLink(iri(KNOWS))))
     # chain closure
     assert ("a", "e") in got and ("a", "b") in got and ("b", "e") in got
@@ -50,39 +59,34 @@ def test_plus_chain_and_cycle(path_store):
     assert len(got) == 10 + 9  # chain C(5,2)=10 pairs + cycle 3*3
 
 
-def test_star_includes_zero_length(path_store):
-    comp = Compiler(path_store)
+def test_star_includes_zero_length(comp):
     got = _pairs(comp, A.PStar(A.PLink(iri(KNOWS))))
     assert ("e", "e") in got          # zero-length on a node with no out-edge
     assert ("lonely", "lonely") in got  # node only present via other predicate
     assert ("a", "e") in got
 
 
-def test_zero_or_one(path_store):
-    comp = Compiler(path_store)
+def test_zero_or_one(comp):
     got = _pairs(comp, A.PZeroOrOne(A.PLink(iri(KNOWS))))
     assert ("a", "b") in got and ("a", "a") in got
     assert ("a", "c") not in got
 
 
-def test_inverse_and_seq(path_store):
-    comp = Compiler(path_store)
+def test_inverse_and_seq(comp):
     got = _pairs(comp, A.PInv(A.PLink(iri(KNOWS))))
     assert ("b", "a") in got and ("a", "b") not in got
     got = _pairs(comp, A.PSeq(A.PLink(iri(KNOWS)), A.PLink(iri(KNOWS))))
     assert ("a", "c") in got and ("a", "b") not in got
 
 
-def test_alt_and_nps(path_store):
-    comp = Compiler(path_store)
+def test_alt_and_nps(comp):
     got = _pairs(comp, A.PAlt(A.PLink(iri(KNOWS)), A.PLink(iri(LIKES))))
     assert ("a", "z") in got and ("a", "b") in got
     got = _pairs(comp, A.PNps((iri(KNOWS),)))
     assert got == {("a", "z"), ("lonely", "lonely")}
 
 
-def test_bound_endpoint_plus(path_store):
-    comp = Compiler(path_store)
+def test_bound_endpoint_plus(comp):
     alg = A.PathPattern(iri(EX + "a"), A.PPlus(A.PLink(iri(KNOWS))), A.Var("o"))
     df = comp.compile(alg).df
     got = {r["o"]["lex"].split("/")[-1] for r in df.collect()}
@@ -223,45 +227,56 @@ def test_closure_rounds_instrumentation(spark):
     assert len(dbl_rounds) <= 6
 
 
-def test_nested_closure_in_sequence(path_store):
+def test_nested_closure_in_sequence(comp):
     """likes/knows* — a closure NESTED inside a sequence (previously
     rejected with 'nested closure paths must go through eval_path')."""
-    comp = Compiler(path_store)
     p = A.PSeq(A.PLink(iri(LIKES)), A.PStar(A.PLink(iri(KNOWS))))
     got = {(a, b) for a, b in _pairs(comp, p)}
     assert got == {("a", "z"), ("a", "x"), ("a", "y"),
                    ("lonely", "lonely")}
 
 
-def test_nested_plus_under_star(path_store):
+def test_nested_plus_under_star(comp):
     """(knows+|likes)* — a plus-closure nested under alternation under
     star; reachability is the closure of knows∪likes plus identity."""
-    comp = Compiler(path_store)
     p = A.PStar(A.PAlt(A.PPlus(A.PLink(iri(KNOWS))), A.PLink(iri(LIKES))))
     got = {b for a, b in _pairs(comp, p) if a == "a"}
     assert got == {"a", "b", "c", "d", "e", "z", "x", "y"}
 
 
-def test_nested_star_of_sequence(path_store):
+def test_nested_star_of_sequence(comp):
     """(knows/knows)* — even-length knows walks."""
-    comp = Compiler(path_store)
     p = A.PStar(A.PSeq(A.PLink(iri(KNOWS)), A.PLink(iri(KNOWS))))
     got = {b for a, b in _pairs(comp, p) if a == "a"}
     assert got == {"a", "c", "e"}
 
 
-def test_nested_closure_id_mode(path_store):
-    """The ID-mode evaluator composes nested closures identically."""
-    from kineo_spark.dictionary import id_compiler
+def test_nested_closures_exact(comp):
+    """Nested closures under sequence and alternation, checked against
+    their full literal pair sets in both modes."""
+    cycle = {(u, w) for u in "xyz" for w in "xyz"}
+    chain_plus = {("a", "b"), ("a", "c"), ("a", "d"), ("a", "e"),
+                  ("b", "c"), ("b", "d"), ("b", "e"),
+                  ("c", "d"), ("c", "e"), ("d", "e")}
+    # likes/knows*
+    p = A.PSeq(A.PLink(iri(LIKES)), A.PStar(A.PLink(iri(KNOWS))))
+    assert _pairs(comp, p) == {("a", "z"), ("a", "x"), ("a", "y"),
+                               ("lonely", "lonely")}
+    # (knows+|likes)*: closure of knows ∪ likes plus identity on every node
+    p = A.PStar(A.PAlt(A.PPlus(A.PLink(iri(KNOWS))), A.PLink(iri(LIKES))))
+    assert _pairs(comp, p) == chain_plus | cycle | {
+        ("a", "x"), ("a", "y"), ("a", "z"),
+        ("a", "a"), ("b", "b"), ("c", "c"), ("d", "d"), ("e", "e"),
+        ("lonely", "lonely")}
+    # likes?/knows+: the zero arm passes knows+ through unchanged
+    p = A.PSeq(A.PZeroOrOne(A.PLink(iri(LIKES))), A.PPlus(A.PLink(iri(KNOWS))))
+    assert _pairs(comp, p) == chain_plus | cycle | {
+        ("a", "x"), ("a", "y"), ("a", "z")}
 
-    term_comp = Compiler(path_store)
-    idc = id_compiler(path_store)
-    for p in (
-        A.PSeq(A.PLink(iri(LIKES)), A.PStar(A.PLink(iri(KNOWS)))),
-        A.PStar(A.PAlt(A.PPlus(A.PLink(iri(KNOWS))), A.PLink(iri(LIKES)))),
-        A.PSeq(A.PZeroOrOne(A.PLink(iri(LIKES))), A.PPlus(A.PLink(iri(KNOWS)))),
-    ):
-        assert _pairs(idc, p) == _pairs(term_comp, p)
+
+def test_path_strategy_rejects_unknown(path_store):
+    with pytest.raises(ValueError, match="path_strategy"):
+        Compiler(path_store, path_strategy="doubl")
 
 
 def test_graph_scoped_paths_all_modes(spark):
